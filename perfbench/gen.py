@@ -4,8 +4,8 @@ Every generator takes a ``random.Random`` and a directory, writes its
 inputs there and returns the facts the output checks compare against.
 The same seed writes byte-identical files: rows come from the seeded
 generator only, CSVs are written by ``csv.writer`` with a fixed line
-terminator, and parquet files by pyarrow without statistics that carry
-wall-clock time.
+terminator, and parquet files by pyarrow from in-memory arrays (no
+pandas metadata, no column statistics).
 """
 
 from __future__ import annotations
@@ -252,7 +252,7 @@ def corpus_shard(
         kinds.append(f"cluster{i}")
         for v in range(rng.randrange(2, 5)):
             var = list(base)
-            var[5 + 9 * v + 2] = rng.choice(vocab)
+            var[7 + 9 * v] = rng.choice(vocab)
             texts.append(" ".join(var))
             kinds.append(f"cluster{i}")
     for _ in range(docs // 25):  # exact copies of unique docs
