@@ -4,13 +4,14 @@ Every generator takes a ``random.Random`` and a directory, writes its
 inputs there and returns the facts the output checks compare against.
 The same seed writes byte-identical files: rows come from the seeded
 generator only, CSVs are written by ``csv.writer`` with a fixed line
-terminator, and parquet files by pyarrow from in-memory arrays (no
-pandas metadata, no column statistics).
+terminator, JSON lines by ``json.dumps``, and parquet files by pyarrow
+from in-memory arrays (no pandas metadata, no column statistics).
 """
 
 from __future__ import annotations
 
 import csv
+import json
 import os
 import random
 import re
@@ -338,4 +339,61 @@ def corpus_shard(
         "input_bytes": sum(
             os.path.getsize(os.path.join(out, f)) for f in os.listdir(out)
         ),
+    }
+
+
+# --------------------------------------------------------------------------
+# ingest stream
+# --------------------------------------------------------------------------
+
+
+def ingest_stream(rng: random.Random, out: str, *, corpus_docs: int, batches: int,
+                  fresh: int) -> dict:
+    """An index corpus and micro-batch files for the dedup ingest loop.
+
+    Each batch holds ``fresh`` new documents and, with higher ids (the
+    loop keeps the lower id of a pair), one each of: an exact copy of a
+    fresh doc, a near copy of another (one token appended: 3-shingle
+    Jaccard ≥ 0.98), an exact and a near copy of corpus docs, and from
+    the second batch on a near copy of a doc an earlier batch
+    accepted. Returns the corpus path, the batch paths in order and
+    the accepted id set.
+    """
+    os.makedirs(os.path.join(out, "batches"), exist_ok=True)
+    vocab = _vocab(rng, 4000)
+
+    def text() -> str:
+        return " ".join(_doc_tokens(rng, vocab, rng.randrange(80, 100)))
+
+    def near(t: str) -> str:
+        return f"{t} {rng.choice(vocab)}"
+
+    corpus = [text() for _ in range(corpus_docs)]
+    corpus_path = os.path.join(out, "corpus.parquet")
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(corpus_docs), pa.int64()), "text": corpus}),
+        corpus_path,
+        write_statistics=False,
+    )
+    accepted: list[tuple[int, str]] = []
+    paths = []
+    for b in range(batches):
+        base = 100_000 * (b + 1)
+        rows = [(base + j, text()) for j in range(fresh)]
+        copied = rng.sample(corpus, 2)
+        planted = [rows[0][1], near(rows[1][1]), copied[0], near(copied[1])]
+        if accepted:
+            planted.append(near(rng.choice(accepted)[1]))
+        accepted.extend(rows)
+        rows += [(base + fresh + j, t) for j, t in enumerate(planted)]
+        rng.shuffle(rows)
+        path = os.path.join(out, "batches", f"batch-{b:03d}.json")
+        with open(path, "w", encoding="utf-8", newline="\n") as f:
+            for doc_id, t in rows:
+                f.write(json.dumps({"doc_id": doc_id, "text": t}) + "\n")
+        paths.append(path)
+    return {
+        "corpus": corpus_path,
+        "batches": paths,
+        "accepted": {doc_id for doc_id, _ in accepted},
     }

@@ -8,21 +8,21 @@ Usage, from the repository root::
 Workloads (``workloads.py``; why each was chosen is in BENCHMARK.json,
 what was left out and why in NOTES.md):
 
-- ``dashboard``: a seeded mix of short catalog and dashboard reads over
-  tables that set-up builds from a seeded CMS-style CSV drop with the
-  etl pipelines (``run_build``, ``run_staffing_metrics``,
-  ``profile_directory``);
+- ``dashboard``: every dashboard page, each issuing the catalog and
+  dashboard reads its caller issues, over tables that set-up builds
+  from a seeded CMS-style CSV drop with the etl pipelines
+  (``run_build``, ``run_staffing_metrics``, ``profile_directory``);
 - ``corpus``: the ``cli corpus-build`` stages plus an IVF kNN top-k on
-  one seeded shard per operation.
+  one seeded shard per operation; its traced set-up also runs the
+  streaming dedup ingest over a fresh minhash index.
 
 One Python process runs one closed-loop client (the next operation
 starts when the previous one returns) against ``local[n]`` Spark, with
 ``n`` the host's core count. Set-up is timed from process start: the
-session, input generation (repeated ``SETUP_REPS`` times; the median
-counts), the state build, and a fixed number of untimed warm-up
-operations. The timed phase then runs a fixed number of operations,
-``--seconds`` worth at the workload's nominal speed, and checks each
-result against facts the generator planted.
+session, input generation, the state build, and a fixed number of
+untimed warm-up operations. The timed phase then runs a fixed number
+of operations, ``--seconds`` worth at the workload's nominal speed,
+and checks each result against facts the generator planted.
 
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` runs the
 same operations both untraced and traced, prints per-layer metrics, the
@@ -48,8 +48,7 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-#: repetitions of input generation; the median counts in ``setup_s``
-SETUP_REPS = 3
+from workloads import STREAM_PROGRESS, WORKLOADS  # noqa: E402
 
 END_TO_END = {
     "setup_s": "s",
@@ -92,6 +91,11 @@ PER_LAYER = (
     + [f"operators.clustering.lloyd_train.{m}" for m in ("s", "jobs")]
     + [f"operators.similarity.knn_ivf_fixed.{m}" for m in ("construct_s", "execute_s", "jobs")]
     + ["corpus.write_parquet.s", "corpus.write_parquet.output_bytes"]
+    + ["operators.dedup_index.write_dedup_index.s", "streaming.batch.s", "streaming.batch.jobs"]
+    + [f"streaming.progress.{key}_ms" for key in STREAM_PROGRESS]
+    + ["streaming.compaction_batch_s", "streaming.plain_batch_s",
+       "operators.dedup_index.files", "operators.dedup_index.bytes",
+       "streaming.commitlog.markers"]
     + [f"op.{m}" for m in ("s", "jobs", "tasks", "shuffle_write_bytes", "spill_bytes")]
     + ["jvm.gc_s", "jvm.gc_count"]
 )
@@ -100,10 +104,12 @@ PER_LAYER = (
 def unit_of(metric: str) -> str:
     if metric in END_TO_END:
         return END_TO_END[metric]
-    if metric.endswith("_bytes"):
+    if metric.endswith(("_bytes", ".bytes")):
         return "bytes"
     if metric.endswith((".s", "_s")):
         return "s"
+    if metric.endswith("_ms"):
+        return "ms"
     return "count"
 
 
@@ -239,7 +245,8 @@ def run_ops(wl, indices, *, bytes_out: list | None, failures: list) -> list[floa
     return times
 
 
-def layer_metrics(tracer, session_s: float, gc: tuple[float, int]) -> dict[str, float]:
+def layer_metrics(tracer, session_s: float, gc: tuple[float, int],
+                  extra: dict[str, float]) -> dict[str, float]:
     calls: dict[str, int] = {}
     sums: dict[str, float] = {}
     inclusive = tracer.inclusive()
@@ -256,12 +263,12 @@ def layer_metrics(tracer, session_s: float, gc: tuple[float, int]) -> dict[str, 
         out[m] = sums.get(m, 0) / calls[name] if calls.get(name) else 0
     out["session.build_session.s"] = session_s
     out["jvm.gc_s"], out["jvm.gc_count"] = gc
+    out.update(extra)
     return out
 
 
 def main(argv=None) -> int:
     args = parse_args(argv)
-    from workloads import WORKLOADS
 
     if args.workload not in WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; "
@@ -291,26 +298,23 @@ def main(argv=None) -> int:
         tracer = Tracer(spark, enabled=False)
         wl = WORKLOADS[args.workload](spark, tracer, run_dir)
 
-        reps = []
-        for r in range(SETUP_REPS):
-            t0 = time.perf_counter()
-            inputs = wl.generate(args.seed, os.path.join(run_dir, f"inputs{r}"))
-            reps.append(time.perf_counter() - t0)
         t0 = time.perf_counter()
-        # the traced run also traces set-up: the dashboard's catalog is
-        # built by the etl pipelines, whose layers no timed phase calls
+        inputs = wl.generate(args.seed, os.path.join(run_dir, "inputs"))
+        generate_s = time.perf_counter() - t0
+        # the traced run also traces set-up, where the layers no timed
+        # phase calls run: the etl pipelines that build the dashboard's
+        # catalog, and the corpus's index build and ingest stream
         tracer.enabled = bool(args.trace)
         wl.prepare(inputs)
         tracer.enabled = False
-        prepare_s = time.perf_counter() - t0
-        startup_s = process_age_s() - sum(reps) - prepare_s
+        prepare_s = time.perf_counter() - t0 - generate_s
         failures: list[int] = []
         t0 = time.perf_counter()
         warm = run_ops(wl, range(wl.warmup_ops), bytes_out=None, failures=failures)
         warmup_s = time.perf_counter() - t0
-        setup_s = startup_s + statistics.median(reps) + prepare_s + warmup_s
-        meta.update(generate_s=reps, startup_s=startup_s, prepare_s=prepare_s, warmup_s=warmup_s,
-                    warmup_curve_s=warm)
+        setup_s = process_age_s()
+        meta.update(session_s=session_s, generate_s=generate_s, prepare_s=prepare_s,
+                    warmup_s=warmup_s, warmup_curve_s=warm)
         if failures:
             raise RuntimeError(f"warm-up operations failed: {failures}")
 
@@ -360,7 +364,8 @@ def main(argv=None) -> int:
           f"({len(failures)} of {attempted} operations)")
     if args.trace:
         traced_wall = statistics.fmean(traced) * wl.unit_ops
-        metrics = layer_metrics(tracer, session_s, (gc1[0] - gc0[0], gc1[1] - gc0[1]))
+        metrics = layer_metrics(tracer, session_s, (gc1[0] - gc0[0], gc1[1] - gc0[1]),
+                                wl.extra_layers)
         print(f"{'span':<48} {'phase':<9} {'calls':>5} {'total_s':>9} {'self_s':>9}")
         for (name, phase), (c, total, own) in sorted(tracer.self_times().items()):
             print(f"{name:<48} {phase:<9} {c:>5} {total:>9.3f} {own:>9.3f}")

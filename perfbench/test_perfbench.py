@@ -54,10 +54,21 @@ def test_planted_facts_are_nontrivial(tmp_path):
     assert len({k[0] for k in facts["staffing"]}) >= 5
     # the drop holds the quirk groups the pipeline must drop
     assert len(facts["staffing"]) < 2 * len({k[1] for k in facts["staffing"]})
-    shards = Corpus(None, None, str(tmp_path)).generate(3, str(tmp_path / "c"))
-    for s in shards:
+    corpus = Corpus(None, None, str(tmp_path))
+    inputs = corpus.generate(3, str(tmp_path / "c"))
+    for s in inputs["shards"]:
         assert s["contaminated"] > 0
         assert 0 < len(s["survivors"]) < 400
+    # every batch plants duplicates beyond its fresh docs, and only the
+    # fresh docs are accepted
+    stream = inputs["stream"]
+    assert len(stream["batches"]) == corpus.stream_batches
+    ids = []
+    for path in stream["batches"]:
+        with open(path) as f:
+            ids += [json.loads(line)["doc_id"] for line in f]
+    assert len(ids) == len(set(ids)) > len(stream["accepted"])
+    assert stream["accepted"] < set(ids)
 
 
 def test_dashboard_check_rejects_a_wrong_result(tmp_path):
@@ -128,9 +139,9 @@ def test_exits_nonzero_without_the_program(tmp_path):
     assert "{" not in p.stdout
 
 
-@pytest.mark.parametrize("trace", [0, 1])
-def test_tiny_run_prints_every_metric_with_its_unit(trace):
-    p = _run(ROOT, "--workload", "dashboard", "--seed", "1", "--seconds", "0.1",
+@pytest.mark.parametrize("workload,trace", [("dashboard", 0), ("dashboard", 1), ("corpus", 1)])
+def test_tiny_run_prints_every_metric_with_its_unit(workload, trace):
+    p = _run(ROOT, "--workload", workload, "--seed", "1", "--seconds", "0.1",
              "--trace", str(trace))
     assert p.returncode == 0, p.stderr[-3000:]
     lines = p.stdout.strip().splitlines()
@@ -151,4 +162,8 @@ def test_tiny_run_prints_every_metric_with_its_unit(trace):
         assert key in meta
     if trace:
         assert any(ln.startswith("tracing overhead") for ln in lines)
-        assert any(ln.startswith("pipelines.run_build ") for ln in lines)
+        # the layers only set-up calls: etl under the dashboard, the
+        # index build and ingest stream under the corpus
+        first = {"dashboard": "pipelines.run_build ", "corpus": "streaming.batch "}[workload]
+        assert any(ln.startswith(first) for ln in lines)
+        assert result["metrics"]["op.jobs"]["value"] > 0

@@ -13,8 +13,13 @@ from __future__ import annotations
 import math
 import os
 import random
+import statistics
 
-from gen import PENALTY_CONFIG, corpus_shard, etl_drop
+from gen import PENALTY_CONFIG, corpus_shard, etl_drop, ingest_stream
+
+
+#: ``StreamingQueryProgress.durationMs`` phases the traced ingest reports
+STREAM_PROGRESS = ("addBatch", "queryPlanning", "walCommit", "latestOffset", "triggerExecution")
 
 
 class CheckFailed(AssertionError):
@@ -55,6 +60,8 @@ class Workload:
         self.spark = spark
         self.tr = tracer
         self.root = root
+        #: per-layer metrics measured outside spans (traced set-up)
+        self.extra_layers: dict[str, float] = {}
 
     def ops_for(self, seconds: float) -> int:
         units = max(1, round(seconds / (self.nominal_op_s * self.unit_ops)))
@@ -111,7 +118,8 @@ def check_etl(spark, facts: dict, result) -> None:
 # --------------------------------------------------------------------------
 # dashboard
 
-#: the catalog tables the mix reads (row counts known to the generator)
+#: the catalog tables a catalog page opens (row counts known to the
+#: generator)
 DASH_TABLES = (
     "staging_penalties",
     "fact_penalty",
@@ -120,33 +128,29 @@ DASH_TABLES = (
     "pbj_daily_nurse_staffing",
     "nh_penalties_2024a",
 )
-#: one deck of the read mix: (kind, table offset). The overview is the
-#: slowest read by a clear gap (median 0.33 s against 0.21 s for the
-#: next kind); with one per deck, ten decks put exactly ten overviews
-#: above the rest and the tail (11th slowest read) at that gap, where
-#: it jumped between runs (spread 0.14-0.21). Two per deck put the
-#: tail inside the overview cluster.
-DASH_DECK = (
-    ("distinct_states", 0),
-    ("distinct_quarters", 0),
-    ("filter_metrics", 0),
-    ("group_mean_state", 0),
-    ("group_mean_quarter", 0),
-    ("pivot", 0),
-    ("numeric_means", 0),
-    ("preview", 0),
-    ("list_tables", 0),
-    ("table_preview", 0),
-    ("metrics_payload", 0),
-    ("overview_payload", 0),
-    ("overview_payload", 3),
-)
+#: one deck: every page of the dashboard once, each issuing the reads
+#: its caller issues, in the caller's order (SURVEY.md §3.3, cli.py)
+DASH_PAGES = {
+    # ``cli dashboard --kind metrics``: one payload, then the render
+    "metrics_page": ("metrics_payload",),
+    # ``cli dashboard --kind overview``: every catalog table at once
+    "overview_page": ("overview_payload",),
+    # metrics_dashboard.py main(): filter domains, the filter, then the
+    # group-mean bar, the quarter x facility pivot, the second mean
+    "metrics_widgets": ("distinct_states", "distinct_provnums", "filter_metrics",
+                        "mean_ratio", "pivot", "mean_contract"),
+    # streamlit_app.py main(): table list, preview, numeric means
+    "catalog_browser": ("list_tables", "table_preview", "numeric_means"),
+    # ``cli catalog <table>``: preview, numeric means
+    "cli_catalog": ("preview", "numeric_means"),
+}
+DECK_READS = sum(len(reads) for reads in DASH_PAGES.values())
 
 
 class Dashboard(Workload):
-    warmup_ops = 6 * len(DASH_DECK)
-    unit_ops = len(DASH_DECK)
-    nominal_op_s = 0.17
+    warmup_ops = 4 * DECK_READS
+    unit_ops = DECK_READS
+    nominal_op_s = 0.31
 
     def generate(self, seed: int, root: str) -> dict:
         facts = etl_drop(random.Random(f"dashboard-{seed}"), os.path.join(root, "drop"),
@@ -157,8 +161,9 @@ class Dashboard(Workload):
 
     def prepare(self, facts: dict) -> None:
         """Build the curated catalog with the etl code, then fix the
-        seeded query mix: decks holding every kind once, shuffled."""
-        from nursinghome_data_pipeline_spark.catalog import stage_overwrite
+        seeded read sequence: decks of every page, page order and
+        widget selections drawn from the seed."""
+        from nursinghome_data_pipeline_spark.catalog import list_tables, stage_overwrite
         from nursinghome_data_pipeline_spark.config import specs_from_dict
 
         result = run_etl(
@@ -170,7 +175,6 @@ class Dashboard(Workload):
         self.facts = facts
         staffing = facts["staffing"]
         self.states = sorted({k[0] for k in staffing})
-        self.quarters = sorted({k[2] for k in staffing})
         self.rows = {
             "staging_penalties": facts["staged_rows"],
             "fact_penalty": facts["staged_rows"],
@@ -179,18 +183,22 @@ class Dashboard(Workload):
             "pbj_daily_nurse_staffing": facts["profiled"]["pbj_daily_nurse_staffing"],
             "nh_penalties_2024a": facts["profiled"]["nh_penalties_2024a"],
         }
+        self.overview_tables = sorted(set(list_tables(self.spark)) - {"dq_completeness"})
         rng = random.Random(f"dashboard-mix-{facts['seed']}")
         self.mix: list[tuple[str, str, list[str], str]] = []
         for d in range(64):
-            deck = list(DASH_DECK)
-            rng.shuffle(deck)
-            for kind, offset in deck:
-                state = rng.choice(self.states)
-                provs = sorted({k[1] for k in staffing if k[0] == state})
-                # tables rotate by deck, not by seed: table sizes differ,
-                # and a seed-chosen share would move the tail between seeds
-                table = DASH_TABLES[(d + offset) % len(DASH_TABLES)]
-                self.mix.append((kind, state, rng.sample(provs, min(3, len(provs))), table))
+            pages = list(DASH_PAGES.values())
+            rng.shuffle(pages)
+            state = rng.choice(self.states)
+            provs = sorted({k[1] for k in staffing if k[0] == state})
+            picked = sorted(rng.sample(provs, min(3, len(provs))))
+            # the catalog pages open tables in turn by deck, not by
+            # seed: table sizes differ, and a seed-chosen share would
+            # move the read times between seeds
+            table = DASH_TABLES[d % len(DASH_TABLES)]
+            for reads in pages:
+                for kind in reads:
+                    self.mix.append((kind, state, picked, table))
         warehouse = self.spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         self.catalog_ratio = bytes_since([warehouse], 0) / facts["input_bytes"]
 
@@ -203,72 +211,72 @@ class Dashboard(Workload):
         metrics = spark.table("metrics_summary")
         if kind == "distinct_states":
             return tr.call("query_layer.distinct_values", q.distinct_values, metrics, "STATE")
-        if kind == "distinct_quarters":
-            return tr.call("query_layer.distinct_values", q.distinct_values, metrics, "CY_Qtr")
+        if kind == "distinct_provnums":
+            return tr.call("query_layer.distinct_values", q.distinct_values,
+                           metrics.where(F.col("STATE") == state), "PROVNUM")
         if kind == "filter_metrics":
             return tr.lazy("query_layer.filter_metrics", q.filter_metrics, metrics,
                            state=state, provnums=provs, action=lambda d: d.collect())
-        if kind == "group_mean_state":
-            return tr.lazy("query_layer.group_mean", q.group_mean, metrics, "STATE",
-                           "nurse_to_patient_ratio", action=lambda d: d.collect())
-        if kind == "group_mean_quarter":
-            return tr.lazy("query_layer.group_mean", q.group_mean, metrics, "CY_Qtr",
-                           "contract_vs_employed_ratio", action=lambda d: d.collect())
+        if kind in ("mean_ratio", "mean_contract"):
+            col = "nurse_to_patient_ratio" if kind == "mean_ratio" else "contract_vs_employed_ratio"
+            selected = q.filter_metrics(metrics, state=state, provnums=provs)
+            return tr.lazy("query_layer.group_mean", q.group_mean, selected, "PROVNUM", col,
+                           action=lambda d: d.collect())
         if kind == "pivot":
-            cols = sorted({k[1] for k in self.facts["staffing"] if k[0] == state})
+            selected = q.filter_metrics(metrics, state=state, provnums=provs)
             return tr.lazy("query_layer.quarter_facility_pivot", q.quarter_facility_pivot,
-                           metrics.where(F.col("STATE") == state), column_values=cols,
-                           action=lambda d: d.collect())
-        if kind == "numeric_means":
-            return tr.lazy("query_layer.numeric_means", q.numeric_means, metrics,
-                           action=lambda d: d.collect())
-        if kind == "preview":
-            return tr.lazy("query_layer.preview", q.preview, spark.table(table), 5,
-                           action=lambda d: d.collect())
+                           selected, column_values=provs, action=lambda d: d.collect())
         if kind == "list_tables":
             return tr.call("catalog.list_tables", catalog.list_tables, spark)
         if kind == "table_preview":
             return tr.lazy("catalog.table_preview", catalog.table_preview, spark, table, 5,
                            action=lambda d: d.collect())
+        if kind == "preview":
+            return tr.lazy("query_layer.preview", q.preview, spark.table(table), 5,
+                           action=lambda d: d.collect())
+        if kind == "numeric_means":
+            return tr.lazy("query_layer.numeric_means", q.numeric_means, spark.table(table),
+                           action=lambda d: d.collect())
         if kind == "metrics_payload":
             payload = tr.call("dashboard.metrics_payload", dashboard.metrics_payload, metrics)
             return payload, tr.call("dashboard.render_html", dashboard.render_metrics_html, payload)
-        payload = tr.call("dashboard.overview_payload", dashboard.overview_payload, spark, [table])
+        payload = tr.call("dashboard.overview_payload", dashboard.overview_payload, spark)
         return payload, tr.call("dashboard.render_html", dashboard.render_overview_html, payload)
 
     def check(self, i: int, result) -> None:
         kind, state, provs, table = self.mix[i % len(self.mix)]
         staffing = self.facts["staffing"]
+        mine = {k[1:]: v for k, v in staffing.items() if k[0] == state and k[1] in provs}
         if kind == "distinct_states":
             expect(result == self.states, "distinct states")
-        elif kind == "distinct_quarters":
-            expect(result == self.quarters, "distinct quarters")
+        elif kind == "distinct_provnums":
+            want = sorted({k[1] for k in staffing if k[0] == state})
+            expect(result == want, "distinct facilities")
         elif kind == "filter_metrics":
-            want = {(k[1], k[2]) for k in staffing if k[0] == state and k[1] in provs}
-            expect({(r.PROVNUM, r.CY_Qtr) for r in result} == want, "filtered rows")
-        elif kind in ("group_mean_state", "group_mean_quarter"):
-            col = "nurse_to_patient_ratio" if kind == "group_mean_state" else "contract_vs_employed_ratio"
-            pos = 0 if kind == "group_mean_state" else 2
+            expect({(r.PROVNUM, r.CY_Qtr) for r in result} == mine.keys(), "filtered rows")
+        elif kind in ("mean_ratio", "mean_contract"):
+            col = "nurse_to_patient_ratio" if kind == "mean_ratio" else "contract_vs_employed_ratio"
             groups: dict[str, list[float]] = {}
-            for k, v in staffing.items():
-                groups.setdefault(k[pos], []).append(v[col])
+            for (prov, _), v in mine.items():
+                groups.setdefault(prov, []).append(v[col])
             expect([r[0] for r in result] == sorted(groups), "group keys")
             for r in result:
                 expect(close(r[1], sum(groups[r[0]]) / len(groups[r[0]])), f"mean {r[0]}")
         elif kind == "pivot":
-            want = {k[2] for k in staffing if k[0] == state}
-            expect([r.CY_Qtr for r in result] == sorted(want), "pivot quarters")
+            expect([r.CY_Qtr for r in result] == sorted({k[1] for k in mine}), "pivot quarters")
             for r in result:
-                for prov, v in r.asDict().items():
-                    w = staffing.get((state, prov, r.CY_Qtr))
-                    if prov != "CY_Qtr":
-                        expect((v is None) == (w is None), f"pivot cell {prov}")
-                        expect(w is None or close(v, w["total_nurse_hours"]), f"pivot {prov}")
-        elif kind == "numeric_means":
-            vals = [v["total_nurse_hours"] for v in staffing.values()]
-            expect(close(result[0].total_nurse_hours, sum(vals) / len(vals)), "numeric means")
+                for prov in provs:
+                    w = mine.get((prov, r.CY_Qtr))
+                    expect((r[prov] is None) == (w is None), f"pivot cell {prov}")
+                    expect(w is None or close(r[prov], w["total_nurse_hours"]), f"pivot {prov}")
         elif kind in ("preview", "table_preview"):
             expect(len(result) == min(5, self.rows[table]), f"preview {table}")
+        elif kind == "numeric_means":
+            expect(len(result) == 1, f"numeric means {table}")
+            if table == "metrics_summary":
+                vals = [v["total_nurse_hours"] for v in staffing.values()]
+                expect(close(result[0].total_nurse_hours, sum(vals) / len(vals)),
+                       "numeric means")
         elif kind == "list_tables":
             expect(set(DASH_TABLES) <= set(result), "catalog tables")
         elif kind == "metrics_payload":
@@ -279,12 +287,13 @@ class Dashboard(Workload):
                 expect(payload[s]["facilities"] == facs, f"payload facilities {s}")
         else:
             payload, html = result
-            expect(list(payload) == [table], "overview tables")
-            expect(len(payload[table]["preview"]) == min(5, self.rows[table]), "overview preview")
-            expect(table in html, "overview html")
+            expect(sorted(payload) == self.overview_tables, "overview tables")
+            for t in DASH_TABLES:
+                expect(len(payload[t]["preview"]) == min(5, self.rows[t]), f"overview {t}")
+                expect(t in html, f"overview html {t}")
 
     def op_bytes(self, i: int, since_ns: int) -> float:
-        # the mix writes nothing: report the at-rest catalog it reads
+        # the reads write nothing: report the at-rest catalog they read
         return self.catalog_ratio
 
 
@@ -298,20 +307,90 @@ class Corpus(Workload):
     shards = 2
     min_quality = 0.6
     jaccard_threshold = 0.5
+    #: the ingest loop traced in set-up: two whole compaction cycles
+    compact_every = 4
+    stream_batches = 8
 
-    def generate(self, seed: int, root: str) -> list[dict]:
-        out = []
+    def generate(self, seed: int, root: str) -> dict:
+        shards = []
         for s in range(self.shards):
             path = os.path.join(root, f"shard{s}")
             facts = corpus_shard(random.Random(f"corpus-{seed}-{s}"), path,
                                  docs=400, vectors=1000, dim=16, queries=2)
             facts["dir"] = path
-            out.append(facts)
-        return out
+            shards.append(facts)
+        stream = ingest_stream(random.Random(f"stream-{seed}"), os.path.join(root, "stream"),
+                               corpus_docs=300, batches=self.stream_batches, fresh=20)
+        return {"shards": shards, "stream": stream}
 
-    def prepare(self, inputs: list[dict]) -> None:
-        self.inputs = inputs
+    def prepare(self, inputs: dict) -> None:
+        self.inputs = inputs["shards"]
         self.out_dir = os.path.join(self.root, "out", "corpus")
+        if self.tr.enabled:
+            self.extra_layers = self.trace_ingest(inputs["stream"])
+
+    def trace_ingest(self, facts: dict) -> dict[str, float]:
+        """Build a minhash index and run the streaming dedup ingest over
+        whole compaction cycles of seeded micro-batches, one batch file
+        at a time; check the accepted ids and return the ``streaming.*``
+        and ``operators.dedup_index.*`` layer metrics. Runs in traced
+        set-up only: no timed operation calls these layers."""
+        from nursinghome_data_pipeline_spark.operators.dedup_index import write_dedup_index
+        from nursinghome_data_pipeline_spark.streaming.commitlog import MARKER_DIR
+        from nursinghome_data_pipeline_spark.streaming.ingest_dedup import (
+            streaming_dedup_ingest,
+        )
+
+        tr, spark = self.tr, self.spark
+        root = os.path.join(self.root, "stream")
+        index, target, src = (os.path.join(root, d) for d in ("index", "target", "src"))
+        os.makedirs(src)
+        tr.call("operators.dedup_index.write_dedup_index", write_dedup_index,
+                spark.read.parquet(facts["corpus"]), index)
+        q = streaming_dedup_ingest(
+            spark.readStream.schema("doc_id long, text string").json(src), index, target,
+            checkpoint_dir=os.path.join(root, "checkpoint"), compact_every=self.compact_every,
+        )
+        # Spark runs every micro-batch's jobs under the query's runId
+        # as job group; the delta per batch is the batch's job count
+        tracker = spark.sparkContext.statusTracker()
+        group = str(q.runId)
+        batch_s, jobs, index_files, index_bytes = [], [], [], []
+        try:
+            for path in facts["batches"]:
+                before = len(tracker.getJobIdsForGroup(group))
+                with tr.span("streaming.batch"):
+                    os.rename(path, os.path.join(src, os.path.basename(path)))
+                    q.processAllAvailable()
+                batch_s.append(tr.spans[-1].end - tr.spans[-1].start)
+                jobs.append(len(tracker.getJobIdsForGroup(group)) - before)
+                index_files.append(sum(len(f) for _, _, f in os.walk(index)))
+                index_bytes.append(bytes_since([index], 0))
+            progress = [p for p in q.recentProgress if p.numInputRows > 0]
+        finally:
+            q.stop()
+        expect(all(jobs), f"micro-batch jobs outside the runId group: {jobs}")
+        data = os.path.join(target, "data")
+        accepted = {r.doc_id for r in spark.read.option("basePath", data).parquet(data)
+                    .select("doc_id").collect()}
+        expect(accepted == facts["accepted"],
+               f"ingest accepted {len(accepted)} ids, planted {len(facts['accepted'])}")
+        expect(len(progress) == len(batch_s), f"{len(progress)} progress reports")
+        compaction = [s for b, s in enumerate(batch_s, 1) if b % self.compact_every == 0]
+        plain = [s for b, s in enumerate(batch_s, 1) if b % self.compact_every]
+        out = {
+            "streaming.batch.jobs": statistics.fmean(jobs),
+            "streaming.compaction_batch_s": statistics.median(compaction),
+            "streaming.plain_batch_s": statistics.median(plain),
+            "operators.dedup_index.files": max(index_files),
+            "operators.dedup_index.bytes": max(index_bytes),
+            "streaming.commitlog.markers": sum(
+                len(f) for _, _, f in os.walk(os.path.join(target, MARKER_DIR))),
+        }
+        for key in STREAM_PROGRESS:
+            out[f"streaming.progress.{key}_ms"] = statistics.fmean(
+                p.durationMs.get(key, 0) for p in progress)
+        return out
 
     def op(self, i: int):
         """The ``cli corpus-build`` stage order on one shard, plus a
@@ -358,9 +437,10 @@ class Corpus(Workload):
                 .localCheckpoint(eager=False)
             ),
         )
-        pairs = tr.lazy("operators.dedup.jaccard_pair_join", jaccard_pair_join, exact,
-                        threshold=self.jaccard_threshold,
-                        action=lambda d: d.localCheckpoint(eager=True))
+        # the pairs stay lazy, as in ``cli corpus-build``: they run
+        # inside connected_components, so their jobs count there
+        with tr.span("operators.dedup.jaccard_pair_join", "construct"):
+            pairs = jaccard_pair_join(exact, threshold=self.jaccard_threshold)
 
         def near_dedup():
             comps = connected_components(exact, pairs)
