@@ -18,7 +18,7 @@ what was left out and why in NOTES.md):
 
 One Python process runs one closed-loop client (the next operation
 starts when the previous one returns) against ``local[n]`` Spark, with
-``n`` the host's core count. Set-up is timed from process start: the
+``n`` half the host's cores. Set-up is timed from process start: the
 session, input generation, the state build, and a fixed number of
 untimed warm-up operations. The timed phase then runs a fixed number
 of operations, ``--seconds`` worth at the workload's nominal speed,
@@ -127,9 +127,10 @@ def process_age_s() -> float:
 
 
 def session_shape() -> tuple[int, str]:
-    """``local[n]`` with n = usable cores; a driver heap of 1/16 of host
-    RAM, between 1 and 4 GiB."""
-    cpus = len(os.sched_getaffinity(0))
+    """``local[n]`` with n = half the usable cores, the rest left to the
+    driver JVM's compiler and GC threads and the Python client; a driver
+    heap of 1/16 of host RAM, between 1 and 4 GiB."""
+    cpus = max(1, len(os.sched_getaffinity(0)) // 2)
     with open("/proc/meminfo") as f:
         total_kb = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
     return cpus, f"{max(1, min(4, total_kb // (16 << 20)))}g"

@@ -303,8 +303,10 @@ class Dashboard(Workload):
 
 class Corpus(Workload):
     warmup_ops = 2
-    nominal_op_s = 7.5
+    nominal_op_s = 6.5
     shards = 2
+    #: a unit is one pass over every shard, the workload's whole input
+    unit_ops = shards
     min_quality = 0.6
     jaccard_threshold = 0.5
     #: the ingest loop traced in set-up: two whole compaction cycles
